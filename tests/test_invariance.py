@@ -97,3 +97,29 @@ def test_invariance_rows_are_not_vacuous():
     rows = [rec["rows"] for rec in art["queries"].values()]
     nonempty = sum(1 for r in rows if r)
     assert nonempty >= 0.9 * len(rows)
+
+
+def test_subset_merge_keeps_header(tmp_path):
+    """A subset ``--json`` run merges its rows under the artifact's
+    existing header instead of relabelling every prior row with the
+    subset's SF, and stamps each row it writes with its own sf_dir."""
+    from tools.invariance_check import write_artifact
+
+    out = tmp_path / "INVARIANCE.json"
+    prior_row = {"match": True, "rows": 3, "err": None, "body_hash": "x"}
+    out.write_text(
+        json.dumps(
+            {
+                "sf_dir": "/data/sf0.001",
+                "variants": ["p4", "p32", "p32_noaqe"],
+                "queries": {"q_old": prior_row},
+            }
+        )
+    )
+    new_row = {"match": True, "rows": 5, "err": None, "body_hash": "y"}
+    write_artifact(str(out), "/data/sf0.01", {"q_new": dict(new_row)})
+    art = json.loads(out.read_text())
+    assert art["sf_dir"] == "/data/sf0.001"
+    assert art["variants"] == ["p4", "p32", "p32_noaqe"]
+    assert art["queries"]["q_old"] == prior_row
+    assert art["queries"]["q_new"] == {**new_row, "sf_dir": "/data/sf0.01"}

@@ -36,7 +36,7 @@ ALLOWED_DRIFT: dict[str, str] = {
     # cache plus the per-level top-2 exchanges. Every exchange moves
     # <= BEAM_W rows except the one census aggregation that always
     # existed; values re-verified exact at all three SFs + all nine
-    # degenerate fixtures this round (OPTIMIZATION_r15.md).
+    # degenerate fixtures this round (r15 entry in CHANGES.md).
     "q361_beam_search_decode": (
         "lazy single-action beam chain brings the 7 level joins into "
         "the audited plan (xchg 0 -> 16, bhj 0 -> 28); per-level "
@@ -232,8 +232,9 @@ def test_planshape_rows_are_fresh():
     invariance pin closes, ADVICE r10 item 4): plan-shape claims for
     rewritten queries must come from a re-audit, not a stale row.
     Subset refresh: `python tools/plan_audit.py --json PLANSHAPE.json
-    <sf_dir> <query...>` is NOT enough (it rotates/replaces the whole
-    artifact) - re-run the full audit at round close as usual."""
+    <sf_dir> <query...>` merges just those rows into the artifact and
+    does NOT rotate PLANSHAPE_PREV.json (only a full run rotates it, so
+    the drift baseline stays the last full snapshot)."""
     from tools.invariance_check import body_hash
     from web_scraping_etl_pipeline_spark.plans import QUERIES
 

@@ -29,7 +29,8 @@ twin already pins exact values), so a diff here is always a real
 nondeterminism bug.
 
 Usage: python tools/invariance_check.py [--json OUT.json] [sf_dir] [query ...]
-Writes INVARIANCE.json at the repo root by default when --json is given.
+``--json`` writes the per-query rows (the INVARIANCE.json artifact);
+a subset run merges its rows into the existing file.
 """
 
 from __future__ import annotations
@@ -376,6 +377,31 @@ def run_variant(spark, name, sf_dir, confs):
     return frame_to_rows(list(pdf.columns), pandas_rows(pdf))
 
 
+def write_artifact(json_out: str, sf_dir: str, records: dict) -> None:
+    """Write the sweep's rows to ``json_out``.
+
+    Subset runs MERGE into an existing artifact (per-row refresh after
+    a targeted rewrite: `--json INVARIANCE.json sf_dir q123_foo`
+    re-sweeps one query without the ~25-min full run) and keep its
+    header, so a one-query refresh at another SF cannot relabel every
+    prior row; each row records the ``sf_dir`` it was swept at. Full
+    runs replace the artifact wholesale.
+    """
+    header = {"sf_dir": sf_dir, "variants": [v for v, _ in VARIANTS]}
+    for rec in records.values():
+        rec["sf_dir"] = sf_dir
+    if len(records) < len(QUERIES) and os.path.exists(json_out):
+        try:
+            with open(json_out) as fh:
+                prior = json.load(fh)
+        except (OSError, ValueError):
+            prior = {}
+        header.update({k: prior[k] for k in header if k in prior})
+        records = {**prior.get("queries", {}), **records}
+    with open(json_out, "w") as fh:
+        json.dump({**header, "queries": records}, fh, indent=1)
+
+
 def main():
     argv = list(sys.argv[1:])
     json_out = None
@@ -435,29 +461,7 @@ def main():
         records[name] = rec
     print(f"\n{len(names) - len(failures)}/{len(names)} partition-invariant")
     if json_out:
-        # Subset runs MERGE into an existing artifact (per-row refresh
-        # after a targeted rewrite: `--json INVARIANCE.json sf_dir
-        # q123_foo` re-sweeps one query without the ~25-min full run);
-        # full runs still replace it wholesale.
-        if len(records) < len(QUERIES) and os.path.exists(json_out):
-            try:
-                with open(json_out) as fh:
-                    prior = json.load(fh)
-            except (OSError, ValueError):
-                prior = {}
-            merged = dict(prior.get("queries", {}))
-            merged.update(records)
-            records = merged
-        with open(json_out, "w") as fh:
-            json.dump(
-                {
-                    "sf_dir": sf_dir,
-                    "variants": [v for v, _ in VARIANTS],
-                    "queries": records,
-                },
-                fh,
-                indent=1,
-            )
+        write_artifact(json_out, sf_dir, records)
     spark.stop()
     return 1 if failures else 0
 

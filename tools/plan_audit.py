@@ -25,9 +25,10 @@ Usage: python tools/plan_audit.py [--json PLANSHAPE.json] [sf_dir] [query ...]
 Exit code 1 if any query trips a flag, else 0 - usable as a CI gate.
 
 ``--json`` additionally writes the per-query shape counts to an
-artifact (the round's ``PLANSHAPE.json``), rotating any existing
-artifact to ``PLANSHAPE_PREV.json`` first so
-``tests/test_planshape.py`` can diff round-over-round and fail on
+artifact (the round's ``PLANSHAPE.json``). A full run rotates any
+existing artifact to ``PLANSHAPE_PREV.json`` first; a subset run
+merges its rows into the artifact without rotating. The PREV file lets
+``tests/test_planshape.py`` diff round-over-round and fail on
 UNEXPLAINED shape drift (a join silently flipping SMJ -> BNLJ is
 invisible in wall-time noise; it is one integer in this diff).
 """
