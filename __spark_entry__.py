@@ -12,7 +12,10 @@ their oracle twins are registered side by side in
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
@@ -37,31 +40,20 @@ def entry(spark: SparkSession) -> DataFrame:
 
 #: The driver's correctness gate records at most the FIRST 50 entries
 #: of ``queries()``, so the iteration order decides what it samples.
-#: Policy (not hand-curated):
+#: The order is three lists, concatenated:
 #:
-#: 1. The reference-parity core (q01-q13 + q36 - every operator the
-#:    reference itself ships) is PINNED first and never leaves the
-#:    gated set, so a regression in the flagship surface is always
-#:    driver-visible.
-#: 2. Any query the PREVIOUS round's driver gate marked non-green is
-#:    fast-tracked next (so a fix is driver-verified the very next
-#:    round instead of waiting out the rotation period).
-#: 3. Every other query follows LEAST-RECENTLY-DRIVER-CHECKED first
-#:    (ties broken by NEWEST REGISTRATION first): a query that has
-#:    never appeared in any CORRECTNESS_r*.json artifact sorts before
-#:    one checked in round 3, which sorts before one checked in round
-#:    5. Among equally-stale queries the most recently registered
-#:    drains first - a brand-new operator has the least assurance
-#:    history (no driver check AND no soak time), so it should reach
-#:    the driver gate the round after it lands rather than queueing
-#:    behind older never-checked names (VERDICT r7 item 1). This is
-#:    self-correcting scheduling - each round's artifact updates the
-#:    last-checked map, so whatever the window actually sampled drops
-#:    to the back of the queue and everything else moves forward.
-#:    Never-checked queries therefore drain first (VERDICT r5 item 7:
-#:    130/274 had never been driver-checked under the old round-robin
-#:    shift), and no rotation arithmetic exists to drift when retries
-#:    consume slots (ADVICE r5).
+#: 1. ``PINNED_CORE``: the reference-parity core (q01-q13 + q36, every
+#:    operator the reference itself ships). It leads every window, so a
+#:    regression in the flagship surface is always driver-visible.
+#: 2. The queries the latest driver artifact marked non-green, so a fix
+#:    is driver-verified the very next round.
+#: 3. Every other query, least-recently-driver-checked first: a query
+#:    absent from every CORRECTNESS_r*.json artifact sorts before one
+#:    last checked in round 3, which sorts before one checked in round
+#:    5. Ties go to the newest registration (highest numeric id), which
+#:    has the least assurance history. Each round's artifact moves what
+#:    the window sampled to the back, so every query cycles through the
+#:    window within a bounded number of rounds.
 #:
 #: The in-repo full sweep (tools/oracle_check.py ->
 #: CORRECTNESS_FULL.json) still covers all queries every round.
@@ -79,10 +71,7 @@ GATE_SLOTS = 50
 def _correctness_artifacts() -> list[tuple[int, str]]:
     """(round, path) for every driver correctness artifact, sorted
     NUMERICALLY by round - lexicographic sorting would put r100 before
-    r99 and feed the fast-track a stale artifact (ADVICE r5)."""
-    import glob  # noqa: PLC0415
-    import re  # noqa: PLC0415
-
+    r99 and feed the retry list a stale artifact."""
     here = os.path.dirname(os.path.abspath(__file__))
     out = []
     for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
@@ -95,8 +84,6 @@ def _correctness_artifacts() -> list[tuple[int, str]]:
 def _last_checked_round() -> dict[str, int]:
     """query name -> highest round whose driver artifact contains it
     (queries absent from every artifact are simply absent)."""
-    import json  # noqa: PLC0415
-
     out: dict[str, int] = {}
     for rnd, path in _correctness_artifacts():
         try:
@@ -112,12 +99,10 @@ def _last_checked_round() -> dict[str, int]:
 
 
 def _last_round_failures(artifact: str | None = None) -> list[str]:
-    """Queries the PREVIOUS driver gate marked non-green: fast-tracked
-    into this round's window so a fix is driver-verified the very next
-    round instead of waiting out the rotation period (~7 rounds).
+    """Queries the PREVIOUS driver gate marked non-green: they run right
+    after the pinned core so a fix is driver-verified the very next
+    round instead of waiting out the rotation period (~8 rounds).
     Rows-only records (no oracle) are not failures."""
-    import json  # noqa: PLC0415
-
     if artifact is None:
         arts = _correctness_artifacts()
         if not arts:
@@ -126,7 +111,7 @@ def _last_round_failures(artifact: str | None = None) -> list[str]:
     try:
         with open(artifact) as fh:
             records = json.load(fh)
-    except Exception:  # noqa: BLE001 - unreadable artifact: no fast-track
+    except Exception:  # noqa: BLE001 - unreadable artifact: no retries
         return []
     bad = []
     for name, rec in records.items():
@@ -146,340 +131,10 @@ def _last_round_failures(artifact: str | None = None) -> list[str]:
     return sorted(bad)
 
 
-#: VERDICT r7 item 1's explicit Done-criterion: ">= 34 of the round-7
-#: queries (q300-q393) green in r08's driver artifact"; VERDICT r8
-#: item 1 extends the same mandate through the round-8 additions
-#: ("extend the fast-track window to cover q394-q439 once q337-q393
-#: drain"). Because the cohort drains LOWEST id first, widening the
-#: range now changes nothing until q337-q393 are exhausted, at which
-#: point q394-q439 continue automatically. This id-range fast-track
-#: pins the cohort right after the parity core + retries; it is
-#: SELF-DEACTIVATING — once a cohort member appears in any driver
-#: artifact it leaves the never-checked set this range draws from, so
-#: the general LRU/newest-first policy resumes by itself.
-#: Round 11 (VERDICT r10 item 1): widen to q441 so the LAST two
-#: registrations (q440/q441) join the final drain cohort - the
-#: q406-q441 backlog is exactly 36 names, which fits one round's
-#: window at MIN_COHORT_SLOTS=36 below.
-FAST_TRACK_RANGE = (300, 441)
-
-#: VERDICT r8 item 1's Done-criterion needs ">= 34 cohort members
-#: green" in the next driver artifact; ADVICE r8 flagged that retries
-#: placed ahead of the cohort could silently eat those slots. While
-#: the fast-track is active, retries + refresh entries ahead of the
-#: cohort are capped at GATE_SLOTS - len(PINNED_CORE) - 34 (= 2
-#: today); the excess still runs, but AFTER the cohort (i.e. it waits
-#: one extra round instead of starving the mandated drain).
-#: Round 11 note: the remaining cohort is 36 names (q406-q441); with
-#: 14 pinned + the 2-slot pre-cohort budget, 34 drain this round
-#: (exactly VERDICT r10 item 1's Done-criterion, backlog 117 -> 83)
-#: and the last two (q440/q441, both already dual-SF green and
-#: degenerate-fixture-pinned) drain first thing in r12 alongside the
-#: REFRESH_QUEUE. 36 was tried and reverted: core + one retry + 36
-#: cohort = 51 > 50, so it would break the retry-next-round promise
-#: (test_last_round_failures_fast_tracked) - the budget must stay
-#: >= 1 for retries while any cohort remains.
-MIN_COHORT_SLOTS = 34
-
-#: VERDICT r8 item 7 introduced the refresh mechanism for q262/q265
-#: (rewritten in round 7, driver rows r03-r06); both were refreshed
-#: green in r09. VERDICT r9 item 6 generalizes it: a round-10 audit
-#: diffed every query's NORMALIZED function body (docstrings
-#: stripped) between the commit of its last driver-checked round and
-#: HEAD; the 22 entries below changed after their last driver row.
-#: value = the last round whose driver row PREDATES the rewrite; an
-#: entry qualifies for a refresh slot while its last-checked round is
-#: <= that cutoff and SELF-DEACTIVATES once a post-rewrite row lands.
-#: While the q371-q439 fast-track cohort still holds >= 34 members,
-#: at most (GATE_SLOTS - core - 34) refresh entries run ahead of the
-#: cohort per round; the rest drain automatically as the cohort
-#: empties.
-REFRESH_QUEUE: dict[str, int] = {
-    # stream-stream rewrites + long-stale dedup/vector family
-    # (q44 originally cutoff 1, refreshed r10; RE-ACTIVATED at the
-    # r12 cutoff by the adversarial-text census NULLIF guard below)
-    "q44_ngram_jaccard_sample": 11,
-    "q52_vector_norms": 1,
-    "q141_bloom_semi_join": 2,
-    "q146_market_share": 2,
-    "q150_decimal_revenue": 2,
-    "q45_simhash": 3,
-    "q46_lsh_verified_jaccard": 3,
-    "q47_embedding_neardup": 3,
-    "q82_stratified_sample": 3,
-    "q85_simhash_hamming_pairs": 3,
-    "q87_contamination_check": 3,
-    "q99_kmeans_assign": 3,
-    "q214_quality_percentile_gate": 4,
-    "q219_incremental_lsh_dedup": 4,
-    "q223_stream_stream_left_outer": 4,
-    "q231_quality_dup_calibration": 4,
-    "q232_stream_stream_full_outer": 4,
-    "q234_erasure_cascade_audit": 4,
-    "q252_consistent_hash_shards": 5,
-    "q267_distinctive_terms": 5,
-    "q121_neardup_rate_by_source": 6,
-    "q306_kmeans_lloyd": 8,
-    # r11 tri-SF sweep fixes (ROUND-tie / LN-domain hardening): both
-    # had driver rows before the rewrite; q273/q276 were also touched
-    # but have never been driver-checked, so the never-checked pool
-    # already schedules them.
-    "q125_geomean_udaf": 3,
-    # r13 extreme census re-activation: the r11 ROUND-tie entry
-    # (cutoff 7) was satisfied by the r12 row, but the r13 NULLIF
-    # guard on the price division (ANSI zero-quantity parity) needs a
-    # fresh post-rewrite row.
-    "q164_min_cost_supplier": 12,
-    # r11 empty-corpus totality hardening (guard/COALESCE/HAVING
-    # parity fixes): entries for the rewrites whose driver rows
-    # predate the change; the rest of that batch (q38/q200/q286/q408/
-    # q416/q418/q431/q437/q271/q272/q278) have never been
-    # driver-checked and are scheduled by the never-checked pool.
-    "q26_region_nation_rollup": 2,
-    "q65_grouping_sets": 3,
-    "q266_dedup_agreement": 5,
-    "q350_blocking_quality": 9,
-    "q370_join_cardinality_audit": 9,
-    # r11 single-row-corpus totality hardening (NULLIF guard parity
-    # for n=1-degenerate divisions): the fixed queries whose driver
-    # rows predate the rewrite and that are NOT in the r11 window
-    # (the 22 fixed cohort members q406-q439 get post-rewrite driver
-    # rows this round; q286/q287/q289/q297 are never-checked).
-    "q224_embedding_outliers": 4,
-    "q307_signal_correlations": 8,
-    "q308_ols_score_on_tokens": 8,
-    "q310_cuped_ab_readout": 8,
-    "q318_mann_whitney_u": 8,
-    "q321_average_precision": 8,
-    "q326_spearman_rank_corr": 8,
-    "q330_jackknife_group_mean": 8,
-    "q332_t_closeness": 8,
-    "q355_simpsons_slope_audit": 9,
-    "q366_pr_curve": 9,
-    "q373_kfold_cv_mae": 10,
-    "q374_tfidf_cosine_topk": 10,
-    "q376_label_modularity": 10,
-    "q387_calinski_harabasz": 10,
-    "q389_cluster_agreement": 10,
-    "q392_runs_test": 10,
-    "q394_kruskal_wallis": 10,
-    "q395_anova_score_by_source": 10,
-    "q396_brown_forsythe": 10,
-    "q399_page_trend_test": 10,
-    "q405_welch_ttest": 10,
-    # r12 degenerate-corpus totality hardening (construction-time
-    # early-outs for the former EXPECTED_NONEMPTY ledger; no-op on any
-    # non-empty corpus): the rewritten queries that HAVE a prior
-    # driver row. Cutoff 11 = the newest round whose rows all predate
-    # the r12 rewrite; self-deactivation is identical to a per-query
-    # historical cutoff (any r12+ row exceeds both), and the uniform
-    # value queues these BEHIND the r11-close entries so the mandated
-    # r12 drain window (VERDICT r11 item 1) keeps its rehearsed
-    # composition. q269/q283/q284/q75 were also rewritten but have
-    # never been driver-checked - the never-checked pool already
-    # schedules them ahead of any checked query.
-    "q50_cosine_topk": 11,
-    "q51_ann_lsh_topk": 11,
-    "q54_ivf_topk": 11,
-    "q156_quantized_rerank": 11,
-    # r12 all-duplicates/constant-value census fixes (corr -> guarded
-    # explicit ratio on both engines, NULLIF on zero-variance/zero-
-    # interval denominators, CASE-guarded LN): rewritten queries with
-    # a prior driver row. q64 is never-checked (scheduled by that
-    # pool).
-    "q134_time_weighted_avg": 11,
-    "q140_regr_stats": 11,
-    "q334_jl_projection_distortion": 11,
-    "q337_naive_bayes_lang": 11,
-    "q382_lof_outliers": 11,
-    "q415_neyman_allocation": 11,
-    # r12 adversarial-text census fixes (trim-vs-strip tokenizer
-    # parity, byte-vs-char phash parity, array_to_string-on-empty
-    # COALESCE, NULLIF on zero-token/zero-weight/zero-tie
-    # denominators): rewritten queries with a prior driver row.
-    "q31_quality_score": 11,
-    # the trade-graph oracle family: the shared _EDGES_SQL self-loop
-    # filter moved from nation KEY to nation NAME (the node identity;
-    # exposed by the pinned constant-value census). q177 was already
-    # enqueued by its early-out rewrite; q274 is never-checked.
-    "q178_triangle_count": 11,
-    "q379_hits_hubs_authorities": 11,
-    "q383_degree_assortativity": 11,
-    "q105_weighted_sample": 11,
-    "q126_chunk_udtf": 11,
-    "q159_media_phash_dedup": 11,
-    "q300_bpe_train_loop": 11,
-    "q301_tokenizer_fertility": 11,
-    "q324_lsh_parameter_sweep": 11,
-    "q327_kendall_tau_daily": 11,
-    "q177_pagerank": 11,
-    "q184_multiprobe_ann": 11,
-    "q225_hybrid_rrf": 11,
-    "q257_ndcg_eval": 11,
-    "q303_power_iteration_pca": 11,
-    "q325_greedy_lm_decode": 11,
-    "q339_adaboost_stumps": 11,
-    "q362_kcenter_coreset": 11,
-    "q427_matryoshka_prefix_recall": 11,
-    # r13 KNN_BUCKET_CAP (VERDICT r12 item 2): the kNN-graph candidate
-    # side is capped per bucket, changing q158/q340 values wherever a
-    # bucket exceeds 64 members (sf0.1; a no-op at the gate SF's
-    # <=43-member buckets, but the BODY changed so the rows must
-    # refresh). q376 shares the rewrite but already holds an active
-    # cutoff-10 entry in the r13 window. Cutoff 12 = newest round
-    # whose driver rows all predate the rewrite; queues these behind
-    # the r12-era block, keeping the rehearsed r13 window intact.
-    "q158_knn_graph": 12,
-    "q340_knn_label_smoothing": 12,
-    # r13 extreme-numerics census, day-bucket floor fix (PERF item
-    # 72): the DuckDB oracles' `//` truncates toward zero while the
-    # Spark twins FLOOR, divergent on pre-epoch timestamps; ~34
-    # oracles moved to the exact fdiv_sql device (values unchanged in
-    # contract - non-negative dividends floor and truncate
-    # identically; re-verified at 3 SFs + 6 fixtures). q135's entry
-    # stays (its oracle carried the r13 literal-brace bug fix, a
-    # semantic oracle repair); q174/q29/q335 stay because they sit in
-    # the rehearsed r14 window (VERDICT r13 item 1 pins its exact
-    # composition) and drain this round anyway. The other 24
-    # restamp-only entries moved to ORACLE_RESTAMP_FASTPATH below
-    # (VERDICT r13 item 3). q392/q399 already held active cutoff-10
-    # entries inside the r13 window, and q186/q187/q38/q93/q98 are
-    # never-checked (scheduled by that pool).
-    "q135_ohlc_bars": 12,
-    "q174_partial_agg_merge": 12,
-    "q29_daily_type_counts": 12,
-    "q335_seasonal_decomposition": 12,
-    # r13 partial-records census (seventh layer, PERF item 78): NULL
-    # policies stated on both engines - listwise deletion across the
-    # rank/stats family, NULL-ordering pins, null-safe joins, Python
-    # worker None-handling, the NULL-propagating hash spelling.
-    # Entries for rewritten queries with prior driver rows; q11 is
-    # pinned core (checked every round), q126/q159/q366/q387/q394/
-    # q399/q405 already sit in the r13 window, q339/q340 hold active
-    # entries, and the rest of the 57 are never-checked.
-    "q103_surrogate_keys": 12,
-    "q110_rank_distributions": 12,
-    "q116_lang_source_drift": 12,
-    "q147_quarantine_split": 12,
-    "q181_mixture_weights": 12,
-    "q185_media_resize": 12,
-    "q202_exact_global_median": 12,
-    "q203_global_cume_dist": 12,
-    "q230_token_budget_fill": 12,
-    "q242_quantile_normalization": 12,
-    "q243_arrow_byte_scan": 12,
-    "q244_psi_drift": 12,
-    "q251_collation_distinct": 12,
-    "q312_length_bucketing": 12,
-    "q313_dp_histogram": 12,
-    "q318_mann_whitney_u": 12,
-    "q323_bottomk_sample_quantiles": 12,
-    "q329_gini_stump_split": 12,
-    "q332_t_closeness": 12,
-    "q33_fingerprint": 12,
-    "q342_dataset_digest": 12,
-    "q352_token_gini_by_source": 12,
-    "q356_conformal_coverage": 12,
-    "q364_permutation_test": 12,
-    "q365_optimal_1d_segmentation": 12,
-    "q372_wilson_ci_by_source": 12,
-    "q375_markov_entropy_rate": 12,
-    "q386_silhouette_sq": 12,
-    "q388_davies_bouldin": 12,
-    "q398_fleiss_kappa_gates": 12,
-    "q406_cliffs_delta": 12,
-    "q407_moods_median": 12,
-    "q412_cmh_gate_association": 12,
-    "q425_ansari_bradley_lepage": 12,
-    "q439_brunner_munzel": 12,
-    "q60_media_decode": 12,
-    # r14 all-NULL census (eighth layer, PERF item 85): the seven
-    # gate/agreement-family fixes - per-cell when/otherwise parity
-    # with the oracles' CASE ... ELSE 0 (q367/q369/q390/q391/q433),
-    # NULLIF on the perfect-agreement kappa and zero-cell MCC /
-    # McNemar / Cochran denominators, and q319's listwise feature
-    # deletion stated on both engines. Entries for the rewritten
-    # queries with prior driver rows whose entry is not already
-    # active (q398's cutoff-12 entry still is); cutoff 13 = newest
-    # round whose driver rows all predate the rewrite - queues them
-    # behind every cutoff-12 block, keeping the rehearsed r14 window
-    # intact (re-verified in-process). q319/q390/q391's inactive
-    # entries are re-activated at the new cutoff.
-    "q319_logreg_quality_gd": 13,
-    "q367_mcnemar_gates": 13,
-    # r14 sign-cancellation census (ninth layer, PERF item 86): the
-    # share/growth/allocation family's zero-net-denominator NULLIF
-    # parity (q102/q137/q163; q92 was also fixed but is never-checked
-    # - the never-checked pool schedules it).
-    "q102_exact_allocation": 13,
-    "q137_mom_revenue_growth": 13,
-    "q163_percent_of_parent": 13,
-    "q369_gate_shapley": 13,
-    "q390_cochrans_q": 13,
-    "q391_mcc_gate": 13,
-    "q433_cronbach_alpha_gates": 13,
-}
-
-#: ORACLE-RESTAMP FAST-PATH (VERDICT r13 item 3). Policy: a refresh
-#: seat exists to get an independent driver verification of a CHANGED
-#: SPARK PLAN. When only the ORACLE text of a query is rewritten (its
-#: oracle_hash moves, its Spark body_hash does not), the driver row
-#: the query already holds is still a valid witness of the exact plan
-#: it would re-run, and the new oracle is re-proven every round by
-#: the in-repo tri-SF sweeps whose rows carry body+oracle fingerprint
-#: pins recomputed at HEAD (tools/oracle_check.py -> CORRECTNESS_FULL
-#: / SF0001 / SF01; tests/test_correctness_artifacts.py fails on any
-#: stale pin). Burning a 50-slot gate seat on that class starves the
-#: never-checked pool - r13 enqueued ~27 such day-bucket restamps and
-#: the backlog-zero forecast slipped r15 -> r17.
-#:
-#: Fast-path = NO gate seat: the names below were REMOVED from
-#: REFRESH_QUEUE and rejoin the normal LRU rotation ("behind the
-#: never-checked pool" by construction - rest sorts never-checked
-#: first). Qualification is mechanical, not judgment: each name's
-#: normalized function-body AST (decorators + docstrings stripped,
-#: the body_hash normalization) was compared between HEAD and the
-#: exact round commit of its last driver row (r8 8a6f3a2 / r9
-#: c52481f / r10 f4d5b5a / r11 0667198) - all 24 identical
-#: (tools/restamp_audit.py re-runs the comparison; shared-helper
-#: drift is covered by the HEAD sweeps' transitive body_hash pins).
-#: A rewrite that touches the SPARK side in any way still takes a
-#: REFRESH_QUEUE seat - this fast-path is only for oracle-text-only
-#: restamps, decided per entry at enqueue time.
-#:
-#: The 24 below are the r13 day-bucket fdiv_sql oracle restamps
-#: (commit 71538c7; "values unchanged in contract" - non-negative
-#: dividends floor and truncate identically) minus q135 (semantic
-#: oracle repair - literal-brace bug) and q174/q29/q335 (kept: they
-#: sit inside the rehearsed r14 window, which VERDICT r13 item 1
-#: pins verbatim). Values = the cutoff each entry held, for the
-#: record.
-ORACLE_RESTAMP_FASTPATH: dict[str, int] = {
-    "q336_daily_autocorrelation": 12,
-    "q346_ses_forecast": 12,
-    "q357_holt_trend_forecast": 12,
-    "q368_overdispersion_audit": 12,
-    "q377_theil_sen_trend": 12,
-    "q378_topk_churn": 12,
-    "q380_holt_winters": 12,
-    "q384_haar_energy": 12,
-    "q393_friedman_test": 12,
-    "q402_ljung_box": 12,
-    "q403_mann_kendall": 12,
-    "q404_pettitt_changepoint": 12,
-    "q408_durbin_watson": 12,
-    "q409_ccf_volume_reach": 12,
-    "q411_grubbs_outlier": 12,
-    "q417_seasonal_mann_kendall": 12,
-    "q418_turning_point_test": 12,
-    "q419_bartels_rvn": 12,
-    "q420_wilcoxon_signed_rank": 12,
-    "q426_cooks_distance_days": 12,
-    "q429_page_hinkley": 12,
-    "q431_sprt_error_monitor": 12,
-    "q432_kendalls_w_weekday": 12,
-    "q437_chow_break_test": 12,
-}
+def _qid(name: str) -> int:
+    """Numeric query id; registration order follows it."""
+    m = re.match(r"q(\d+)", name)
+    return int(m.group(1)) if m else 0
 
 
 def _gate_order(names: list[str]) -> list[str]:
@@ -488,59 +143,12 @@ def _gate_order(names: list[str]) -> list[str]:
         n for n in _last_round_failures()
         if n in names and n not in PINNED_CORE
     ]
-    import re  # noqa: PLC0415
-
     checked = _last_checked_round()
-    refresh = [
-        n for n, cutoff in sorted(
-            REFRESH_QUEUE.items(), key=lambda kv: (kv[1], kv[0])
-        )
-        if n in names and n not in PINNED_CORE and n not in retry
-        and checked.get(n, 0) <= cutoff
-    ]
-
-    # Addition order = the numeric query id (q394 was added after
-    # q393, always); -id means newest-added first on ties.
-    def qid(n: str) -> int:
-        m = re.match(r"q(\d+)", n)
-        return int(m.group(1)) if m else 0
-
-    lo, hi = FAST_TRACK_RANGE
-    cohort = sorted(
-        (
-            n for n in names
-            if n not in PINNED_CORE and n not in retry
-            and n not in refresh
-            and n not in checked and lo <= qid(n) <= hi
-        ),
-        key=qid,
-    )
-    # Cap pre-cohort consumption (retries first, refresh second) so the
-    # cohort keeps its mandated slots inside the 50-slot gate; overflow
-    # runs right after the cohort instead of displacing it. The
-    # protected count is min(MIN_COHORT_SLOTS, len(cohort)): while the
-    # fast-track still holds >= 34 members the original r8 cap applies
-    # unchanged, and once it has drained to a small TAIL (round 12:
-    # exactly q440/q441) the tail is still protected rather than being
-    # pushed past slot 50 by a long refresh queue - VERDICT r11 item 1
-    # names the r12 window as "14 core + q440/q441 cohort tail + the
-    # oldest-cutoff REFRESH_QUEUE entries", which requires exactly this
-    # (the unmodified rule would spend all 36 free slots on refresh
-    # entries and strand the 2-name tail for another round).
-    budget = max(
-        0, GATE_SLOTS - len(pinned) - min(MIN_COHORT_SLOTS, len(cohort))
-    )
-    pre = (retry + refresh)[:budget] if cohort else retry + refresh
-    overflow = [n for n in retry + refresh if n not in pre]
     rest = sorted(
-        (
-            n for n in names
-            if n not in PINNED_CORE and n not in retry
-            and n not in refresh and n not in cohort
-        ),
-        key=lambda n: (checked.get(n, -1), -qid(n), n),
+        (n for n in names if n not in PINNED_CORE and n not in retry),
+        key=lambda n: (checked.get(n, -1), -_qid(n), n),
     )
-    return pinned + pre + cohort + overflow + rest
+    return pinned + retry + rest
 
 
 def _ordered(names_to_vals: dict) -> dict:

@@ -65,9 +65,8 @@ def test_schedule_covers_every_query_within_bounded_period(monkeypatch):
     free = max(entry_mod.GATE_SLOTS - len(pinned), 1)
     period = -(-len(rest) // free)  # ceil
 
-    # neutralize the failure fast-track + refresh for pure-schedule math
+    # neutralize the failure fast-track for pure-schedule math
     monkeypatch.setattr(entry_mod, "_last_round_failures", lambda: [])
-    monkeypatch.setattr(entry_mod, "REFRESH_QUEUE", {})
     checked: dict[str, int] = {}
     monkeypatch.setattr(
         entry_mod, "_last_checked_round", lambda: dict(checked)
@@ -89,7 +88,6 @@ def test_never_checked_queries_lead_the_tail(monkeypatch):
     # already checked, regardless of name order.
     names = list(entry_mod.QUERIES)
     monkeypatch.setattr(entry_mod, "_last_round_failures", lambda: [])
-    monkeypatch.setattr(entry_mod, "REFRESH_QUEUE", {})
     tail = [n for n in sorted(names) if n not in entry_mod.PINNED_CORE]
     # mark everything checked except one late-alphabet victim
     victim = tail[-1]
@@ -104,59 +102,18 @@ def test_never_checked_queries_lead_the_tail(monkeypatch):
 
 
 def test_never_checked_ties_break_newest_first(monkeypatch):
-    # VERDICT r7 item 1 has two halves: (a) the q300-q393 cohort the
-    # verdict's Done-criterion names is FAST-TRACKED (ascending id)
-    # right after the parity core while any of it remains
-    # never-checked; (b) among all OTHER equally-stale queries the
-    # NEWEST addition (highest numeric qid) drains first, so a
-    # freshly-landed operator reaches the driver gate the next round
-    # instead of queueing behind older never-checked names.
+    # among equally-stale queries the NEWEST addition (highest numeric
+    # qid) drains first, so a freshly-landed operator reaches the
+    # driver gate the next round instead of queueing behind older
+    # never-checked names.
     names = list(entry_mod.QUERIES)
     monkeypatch.setattr(entry_mod, "_last_round_failures", lambda: [])
-    monkeypatch.setattr(entry_mod, "REFRESH_QUEUE", {})
     monkeypatch.setattr(entry_mod, "_last_checked_round", dict)
     order = entry_mod._gate_order(names)
     pinned = [n for n in entry_mod.PINNED_CORE if n in names]
-    import re
-
-    lo, hi = entry_mod.FAST_TRACK_RANGE
-    tail_ids = [
-        int(re.match(r"q(\d+)", n).group(1))
-        for n in order[len(pinned):]
-    ]
-    cohort = [i for i in tail_ids if lo <= i <= hi]
-    rest = [i for i in tail_ids if not (lo <= i <= hi)]
-    # cohort first, in ascending registration order...
-    assert tail_ids[: len(cohort)] == cohort == sorted(cohort)
-    # ...then everything else newest-first
-    assert tail_ids[len(cohort):] == rest
-    assert rest == sorted(rest, reverse=True)
-
-
-def test_fast_track_self_deactivates(monkeypatch):
-    # once every cohort member has a driver row, the fast-track list
-    # is empty and the general policy resumes by itself.
-    import re
-
-    names = list(entry_mod.QUERIES)
-    lo, hi = entry_mod.FAST_TRACK_RANGE
-
-    def qid(n):
-        return int(re.match(r"q(\d+)", n).group(1))
-
-    checked = {n: 8 for n in names if lo <= qid(n) <= hi}
-    monkeypatch.setattr(entry_mod, "_last_round_failures", lambda: [])
-    monkeypatch.setattr(entry_mod, "REFRESH_QUEUE", {})
-    monkeypatch.setattr(
-        entry_mod, "_last_checked_round", lambda: dict(checked)
-    )
-    order = entry_mod._gate_order(names)
-    pinned = [n for n in entry_mod.PINNED_CORE if n in names]
-    head = order[len(pinned): len(pinned) + 10]
-    # with the cohort checked, never-checked newest-first leads again
-    assert all(qid(n) > hi or qid(n) < lo for n in head)
-    hids = [qid(n) for n in head]
-    assert hids == sorted(hids, reverse=True)
+    tail_ids = [entry_mod._qid(n) for n in order[len(pinned):]]
+    assert len(tail_ids) == len(names) - len(pinned)
+    assert tail_ids == sorted(tail_ids, reverse=True)
 
 
 def test_schedule_advances_between_rounds(monkeypatch):
@@ -220,139 +177,18 @@ def test_failure_parser_reads_r04_artifact():
     assert fails == ["q230_token_budget_fill"]
 
 
-def test_refresh_entries_slot_after_pinned_when_stale(monkeypatch):
-    # VERDICT r9 item 6: entries whose driver row is at or before
-    # their per-entry rewrite cutoff consume the (capped) pre-cohort
-    # budget right after the pinned core, oldest-cutoff first; the
-    # overflow queues directly behind the cohort instead of starving
-    # the >= MIN_COHORT_SLOTS mandate.
-    names = list(entry_mod.QUERIES)
-    monkeypatch.setattr(entry_mod, "_last_round_failures", lambda: [])
-    monkeypatch.setattr(
-        entry_mod,
-        "_last_checked_round",
-        lambda: {
-            n: cutoff for n, cutoff in entry_mod.REFRESH_QUEUE.items()
-        },
-    )
-    order = entry_mod._gate_order(names)
-    pinned = [n for n in entry_mod.PINNED_CORE if n in names]
-    np = len(pinned)
-    expected = [
-        n for n, _ in sorted(
-            entry_mod.REFRESH_QUEUE.items(), key=lambda kv: (kv[1], kv[0])
-        )
-        if n in names
-    ]
-    budget = max(
-        0,
-        entry_mod.GATE_SLOTS - np - entry_mod.MIN_COHORT_SLOTS,
-    )
-    # pre-cohort slice holds the first `budget` entries...
-    assert order[np: np + budget] == expected[:budget]
-    # ...and every remaining entry still appears before the general
-    # LRU tail (i.e. directly after the never-checked cohort).
-    import re
+def test_gate_order_pinned_for_round15_artifacts(monkeypatch):
+    # the emitted order for the driver artifacts r01-r15 is frozen:
+    # a scheduling refactor must reproduce it name for name. Later
+    # rounds' artifacts are filtered out so they cannot move the pin.
+    import hashlib
 
-    lo, hi = entry_mod.FAST_TRACK_RANGE
-    checked = entry_mod._last_checked_round()
-
-    def qid(n):
-        m = re.match(r"q(\d+)", n)
-        return int(m.group(1)) if m else 0
-
-    cohort_len = len([
-        n for n in names
-        if n not in entry_mod.PINNED_CORE and n not in expected
-        and n not in checked and lo <= qid(n) <= hi
-    ])
-    overflow = expected[budget:]
-    start = np + budget + cohort_len
-    assert order[start: start + len(overflow)] == overflow
-
-
-def test_refresh_self_deactivates_after_post_rewrite_row(monkeypatch):
-    # once a driver row NEWER than the rewrite exists the refresh entry
-    # leaves the pre-cohort slot for good.
-    names = list(entry_mod.QUERIES)
-    monkeypatch.setattr(entry_mod, "_last_round_failures", lambda: [])
-    monkeypatch.setattr(
-        entry_mod,
-        "_last_checked_round",
-        lambda: {
-            n: cutoff + 1
-            for n, cutoff in entry_mod.REFRESH_QUEUE.items()
-        },
-    )
-    order = entry_mod._gate_order(names)
-    pinned = [n for n in entry_mod.PINNED_CORE if n in names]
-    head = order[len(pinned): len(pinned) + len(entry_mod.REFRESH_QUEUE)]
-    assert not set(head) & set(entry_mod.REFRESH_QUEUE)
-
-
-def test_cohort_keeps_min_slots_under_retry_pressure(monkeypatch):
-    # ADVICE r8: many retries must not starve the fast-track cohort
-    # below MIN_COHORT_SLOTS; the overflow runs AFTER the cohort.
-    import re
-
-    names = list(entry_mod.QUERIES)
-    lo, hi = entry_mod.FAST_TRACK_RANGE
-
-    def qid(n):
-        m = re.match(r"q(\d+)", n)
-        return int(m.group(1)) if m else 0
-
-    fake_retries = [
-        n for n in sorted(names)
-        if n not in entry_mod.PINNED_CORE and qid(n) < lo
-    ][:6]
-    monkeypatch.setattr(
-        entry_mod, "_last_round_failures", lambda: list(fake_retries)
-    )
-    monkeypatch.setattr(entry_mod, "_last_checked_round", dict)
-    window = entry_mod._gate_order(names)[: entry_mod.GATE_SLOTS]
-    in_cohort = [n for n in window if lo <= qid(n) <= hi]
-    assert len(in_cohort) >= entry_mod.MIN_COHORT_SLOTS
-    # every retry still appears in the full order (never dropped)
-    order = entry_mod._gate_order(names)
-    assert all(r in order for r in fake_retries)
-
-
-def test_restamp_fastpath_is_disjoint_and_witnessed():
-    """VERDICT r13 item 3: the oracle-restamp fast-path. Pins:
-
-    - fast-path names hold NO refresh seat (disjoint from
-      REFRESH_QUEUE - the whole point is no gate seat);
-    - every fast-path name has an existing driver row (the prior row
-      is the Spark-side witness the policy relies on; a never-checked
-      name has no witness and may not take the fast-path);
-    - every fast-path name is a registered query with an oracle (the
-      HEAD sweeps re-prove the restamped oracle each round).
-    """
-    fp = entry_mod.ORACLE_RESTAMP_FASTPATH
-    assert fp, "fast-path list unexpectedly empty"
-    assert not set(fp) & set(entry_mod.REFRESH_QUEUE)
-    assert not set(fp) & set(entry_mod.PINNED_CORE)
-    checked = entry_mod._last_checked_round()
-    from web_scraping_etl_pipeline_spark.plans import ORACLE, QUERIES
-
-    for name in fp:
-        assert name in checked, f"{name}: no driver row - not eligible"
-        assert name in QUERIES and name in ORACLE
-
-
-def test_restamp_fastpath_bodies_unchanged_since_witness():
-    """The mechanical qualification itself (tools/restamp_audit.py):
-    each fast-path name's normalized body AST at HEAD equals the one
-    at its last-driver-row round commit. Run as a subprocess so a
-    broken git state fails loudly rather than skipping."""
-    import subprocess
-
-    proc = subprocess.run(
-        [sys.executable, "tools/restamp_audit.py"],
-        capture_output=True,
-        text=True,
-        cwd="/root/repo",
-        check=False,
-    )
-    assert proc.returncode == 0, proc.stdout + proc.stderr
+    arts = [(r, p) for r, p in entry_mod._correctness_artifacts() if r <= 15]
+    assert [r for r, _ in arts] == list(range(1, 16))
+    monkeypatch.setattr(entry_mod, "_correctness_artifacts", lambda: arts)
+    q = list(entry_mod.queries())
+    assert list(entry_mod.oracle_sql()) == q
+    assert q[14] == "q290_truncation_sweep"  # 15th: first after the core
+    assert q[49] == "q189_priority_check"  # 50th: last in the window
+    digest = hashlib.sha256("\n".join(q).encode()).hexdigest()[:16]
+    assert digest == "04ea8458f5698976"

@@ -161,3 +161,26 @@ def test_results_stable_after_transient_release(spark):
     released = release_transients()
     assert released >= 1
     assert _rows(d, "o_orderkey", "b") == first  # recomputed from lineage
+
+
+def test_q197_node_cache_is_released(spark):
+    """q197's persisted node frame is registered as a transient, so
+    release_transients() leaves no cache entry for it behind."""
+    from pyspark import StorageLevel
+
+    from web_scraping_etl_pipeline_spark.plans import QUERIES
+    from web_scraping_etl_pipeline_spark.plans.common import (
+        release_transients,
+    )
+
+    def nodes():  # the same plan q197 persists
+        return t(spark, SF_DIR, "part").select(
+            F.col("p_partkey").alias("node"),
+            F.col("p_retailprice").alias("own"),
+        )
+
+    release_transients()
+    QUERIES["q197_subtree_rollup"](spark, SF_DIR).collect()
+    assert nodes().storageLevel != StorageLevel.NONE
+    assert release_transients() >= 1
+    assert nodes().storageLevel == StorageLevel.NONE

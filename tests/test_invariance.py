@@ -99,6 +99,25 @@ def test_invariance_rows_are_not_vacuous():
     assert nonempty >= 0.9 * len(rows)
 
 
+def test_invariance_rows_match_sf0001_sweep():
+    """Every row is swept at the artifact's SF (sf0.001): its row count
+    equals the sf0.001 oracle sweep's Spark row count. A row swept at
+    another SF (e.g. sf0.01's 10x row counts) fails here."""
+    art = _load()
+    with open(os.path.join(ROOT, "CORRECTNESS_SF0001.json")) as fh:
+        ref = json.load(fh)
+    off = {
+        n: (rec["rows"], ref.get(n, {}).get("spark_rows"))
+        for n, rec in art["queries"].items()
+        if rec["rows"] != ref.get(n, {}).get("spark_rows")
+    }
+    assert off == {}, (
+        f"{len(off)} rows disagree with CORRECTNESS_SF0001.json "
+        f"(invariance rows, sweep rows): {dict(list(off.items())[:5])}"
+    )
+    assert os.path.basename(art["sf_dir"]) == "sf0.001"
+
+
 def test_subset_merge_keeps_header(tmp_path):
     """A subset ``--json`` run merges its rows under the artifact's
     existing header instead of relabelling every prior row with the

@@ -111,6 +111,33 @@ def test_run_batch_first_run_full_load(spark, tmp_path):
     assert read_last_processed_time(state) == BASE - dt.timedelta(hours=3)
 
 
+def test_run_batch_drops_within_batch_duplicates(spark, tmp_path):
+    # the anti-join only sees silver, so a batch that repeats a
+    # job_link must be deduplicated on its own (as the streaming merge
+    # does); both the parquet and the bucketed path keep one row.
+    from web_scraping_etl_pipeline_spark.pipeline import run_batch_bucketed
+
+    rows = _raw_batch(spark).collect()
+    dup = spark.createDataFrame([rows[0], rows[1], rows[0]], schema=JOBS_RAW)
+
+    silver = str(tmp_path / "silver")
+    state = str(tmp_path / "s.json")
+    res = run_batch(spark, dup, silver, state, now_us=BASE_US)
+    got = [r["job_link"] for r in spark.read.parquet(silver).collect()]
+    assert res["rows"] == 2
+    assert sorted(got) == ["https://x/1", "https://x/2"]
+
+    table = "silver_jobs_dup_test"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    try:
+        res = run_batch_bucketed(
+            spark, dup, table, str(tmp_path / "b.json"), now_us=BASE_US
+        )
+        assert res["rows"] == 2 and spark.table(table).count() == 2
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
 def test_run_batch_bucketed(spark, tmp_path):
     # Scale path: silver as a bucketed-by-job_link table. Asserts the
     # same incremental semantics as run_batch PLUS the plan property the

@@ -760,10 +760,9 @@ DRIVER_MATERIALIZE_CALLS = {
 #: site key = "<path relative to the package>:<enclosing function>".
 #: Rationale must name the bound.
 BOUNDED_COLLECT_ALLOW: dict[str, str] = {
-    "pipeline.py:run_batch":
-        "1-row count+max batch gate (F6/A2): scalar fold of the batch",
-    "pipeline.py:run_batch_bucketed":
-        "same 1-row batch-gate scalar as run_batch",
+    "pipeline.py:_persist_batch":
+        "1-row count+max(+distinct links) batch gate (F6/A2) shared by "
+        "run_batch and run_batch_bucketed: scalar fold of the batch",
     "plans/analytics.py:q75_unpivot_roundtrip":
         "distinct event_type list: bounded by the 5-value type domain",
     "plans/analytics.py:q109_median_abs_deviation":

@@ -117,67 +117,60 @@ def main() -> int:
 
     jobs: dict[int, dict] = {}
     stages: dict[int, dict] = {}
-    if True:
-        for line in lines():
-            try:
-                ev = json.loads(line)
-            except ValueError:
-                continue
-            e = ev.get("Event")
-            if e == "SparkListenerJobStart":
-                jid = ev["Job ID"]
-                jobs[jid] = {
-                    "t0": ev["Submission Time"] / 1000.0,
-                    "desc": ev.get("Properties", {}).get(
-                        "spark.job.description", ""
-                    ),
-                    "stage_ids": [
-                        s["Stage ID"] for s in ev.get("Stage Infos", [])
-                    ],
-                }
-            elif e == "SparkListenerJobEnd":
-                jid = ev["Job ID"]
-                if jid in jobs:
-                    jobs[jid]["t1"] = ev["Completion Time"] / 1000.0
-            elif e == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                sid = si["Stage ID"]
-                stages[sid] = {
-                    "name": si.get("Stage Name", ""),
-                    "tasks": si.get("Number of Tasks", 0),
-                    "t0": si.get("Submission Time", 0) / 1000.0,
-                    "t1": si.get("Completion Time", 0) / 1000.0,
-                }
-            elif e == "SparkListenerTaskEnd":
-                sid = ev["Stage ID"]
-                st = stages.setdefault(sid, {})
-                m = ev.get("Task Metrics") or {}
-                st["task_time_ms"] = st.get("task_time_ms", 0) + m.get(
-                    "Executor Run Time", 0
-                )
-                st["deser_ms"] = st.get("deser_ms", 0) + m.get(
-                    "Executor Deserialize Time", 0
-                )
-                st["gc_ms"] = st.get("gc_ms", 0) + m.get("JVM GC Time", 0)
-                srm = m.get("Shuffle Read Metrics") or {}
-                st["shuf_read"] = (
-                    st.get("shuf_read", 0)
-                    + srm.get("Remote Bytes Read", 0)
-                    + srm.get("Local Bytes Read", 0)
-                )
-                st["fetch_wait_ms"] = st.get("fetch_wait_ms", 0) + srm.get(
-                    "Fetch Wait Time", 0
-                )
-                swm = m.get("Shuffle Write Metrics") or {}
-                st["shuf_write"] = st.get("shuf_write", 0) + swm.get(
-                    "Shuffle Bytes Written", 0
-                )
-                pym = [
-                    a
-                    for a in ev.get("Accumulables", [])
-                    or []
-                ]
-                del pym
+    for line in lines():
+        try:
+            ev = json.loads(line)
+        except ValueError:
+            continue
+        e = ev.get("Event")
+        if e == "SparkListenerJobStart":
+            jid = ev["Job ID"]
+            jobs[jid] = {
+                "t0": ev["Submission Time"] / 1000.0,
+                "desc": ev.get("Properties", {}).get(
+                    "spark.job.description", ""
+                ),
+                "stage_ids": [
+                    s["Stage ID"] for s in ev.get("Stage Infos", [])
+                ],
+            }
+        elif e == "SparkListenerJobEnd":
+            jid = ev["Job ID"]
+            if jid in jobs:
+                jobs[jid]["t1"] = ev["Completion Time"] / 1000.0
+        elif e == "SparkListenerStageCompleted":
+            si = ev["Stage Info"]
+            sid = si["Stage ID"]
+            stages[sid] = {
+                "name": si.get("Stage Name", ""),
+                "tasks": si.get("Number of Tasks", 0),
+                "t0": si.get("Submission Time", 0) / 1000.0,
+                "t1": si.get("Completion Time", 0) / 1000.0,
+            }
+        elif e == "SparkListenerTaskEnd":
+            sid = ev["Stage ID"]
+            st = stages.setdefault(sid, {})
+            m = ev.get("Task Metrics") or {}
+            st["task_time_ms"] = st.get("task_time_ms", 0) + m.get(
+                "Executor Run Time", 0
+            )
+            st["deser_ms"] = st.get("deser_ms", 0) + m.get(
+                "Executor Deserialize Time", 0
+            )
+            st["gc_ms"] = st.get("gc_ms", 0) + m.get("JVM GC Time", 0)
+            srm = m.get("Shuffle Read Metrics") or {}
+            st["shuf_read"] = (
+                st.get("shuf_read", 0)
+                + srm.get("Remote Bytes Read", 0)
+                + srm.get("Local Bytes Read", 0)
+            )
+            st["fetch_wait_ms"] = st.get("fetch_wait_ms", 0) + srm.get(
+                "Fetch Wait Time", 0
+            )
+            swm = m.get("Shuffle Write Metrics") or {}
+            st["shuf_write"] = st.get("shuf_write", 0) + swm.get(
+                "Shuffle Bytes Written", 0
+            )
 
     summary = {}
     for name, (t0, t1) in spans.items():

@@ -23,7 +23,7 @@ from __future__ import annotations
 import datetime as dt
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Row, SparkSession, functions as F
 
 from .functions import (
     clean_salary_bounds_from,
@@ -96,6 +96,35 @@ def transform(df: DataFrame, now_us: int | None = None) -> DataFrame:
     )
 
 
+def _persist_batch(batch: DataFrame) -> tuple[DataFrame, Row]:
+    """Persist the batch and read its F6/A2 stats (``n`` rows, ``mx``
+    max posted_date) in one aggregation, which also counts distinct
+    job_links. A batch that carries one link twice is reduced to one
+    row per link, as the streaming merge (streaming/jobs_stream.py)
+    does. That dedup shuffles whole rows, so it runs only when the
+    counts show a repeat; the distinct count shuffles just the key."""
+    cached = batch.persist()
+    try:
+        stats = cached.agg(
+            F.count("*").alias("n"),
+            F.max("posted_date").alias("mx"),
+            F.count_distinct("job_link").alias("links"),
+        ).first()
+        if stats["links"] < stats["n"]:
+            stale = cached
+            cached = stale.dropDuplicates(["job_link"]).persist()
+            try:
+                stats = cached.agg(
+                    F.count("*").alias("n"), F.max("posted_date").alias("mx")
+                ).first()
+            finally:
+                stale.unpersist()
+    except BaseException:
+        cached.unpersist()
+        raise
+    return cached, stats
+
+
 def run_batch(
     spark: SparkSession,
     bronze: DataFrame,
@@ -106,7 +135,8 @@ def run_batch(
     """One incremental run. Returns run telemetry (rows in/out, watermark).
 
     Order of operations is the B4 fix: filter -> clean -> transform ->
-    dedup vs silver -> write silver -> only then advance the watermark.
+    dedup vs silver and within the batch -> write silver -> only then
+    advance the watermark.
     """
     wm = read_last_processed_time(state_path)
     fresh = bronze.filter(newer_than("posted_date", wm))
@@ -144,11 +174,8 @@ def run_batch(
     # ONE computation of the clean+anti-join lineage (batches are
     # bounded - one scrape run - so caching them is cheap; the
     # anti-join's silver scan is the part worth not paying twice).
-    cleaned = cleaned.persist()
+    cleaned, stats = _persist_batch(cleaned)
     try:
-        stats = cleaned.agg(
-            F.count("*").alias("n"), F.max("posted_date").alias("mx")
-        ).first()
         if stats["n"] == 0:
             return {"rows": 0, "watermark": wm, "skipped": True}
 
@@ -227,11 +254,8 @@ def run_batch_bucketed(
 
     # same one-pass persist as run_batch: stats + bucketed write share
     # one computation of the clean+anti-join lineage.
-    cleaned = cleaned.persist()
+    cleaned, stats = _persist_batch(cleaned)
     try:
-        stats = cleaned.agg(
-            F.count("*").alias("n"), F.max("posted_date").alias("mx")
-        ).first()
         if stats["n"] == 0:
             return {"rows": 0, "watermark": wm, "skipped": True}
 

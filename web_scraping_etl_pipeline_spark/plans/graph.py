@@ -276,10 +276,12 @@ def q197_subtree_rollup(spark, sf_dir):
     per pass like q177's PageRank loop. The oracle is the genuine
     WITH RECURSIVE transitive closure, so the hash match proves the
     loop == the recursion."""
-    p = t(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("node"),
-        F.col("p_retailprice").alias("own"),
-    ).persist()
+    p = transient_persist(
+        t(spark, sf_dir, "part").select(
+            F.col("p_partkey").alias("node"),
+            F.col("p_retailprice").alias("own"),
+        )
+    )
     totals = p.select(
         "node",
         F.col("own").alias("subtree_value"),

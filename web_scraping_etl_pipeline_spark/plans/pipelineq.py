@@ -29,9 +29,11 @@ from .registry import query
 _HOUR_US = 3_600_000_000
 
 #: silver rows come back as epoch-us bigints so the oracle never
-#: touches timestamp typing.
+#: touches timestamp typing. DISTINCT: the pipeline keeps one row per
+#: job_link even when a batch repeats one (a duplicated part row).
 _PROBE_ORACLE = f"""
-    SELECT 'https://jobs/' || CAST(p_partkey AS VARCHAR) AS job_link,
+    SELECT DISTINCT
+           'https://jobs/' || CAST(p_partkey AS VARCHAR) AS job_link,
            trim(p_name) AS job_name,
            CASE WHEN p_partkey % 2 = 0
                 THEN ((p_partkey % 50 + 1) + (p_partkey % 50 + 11)) / 2.0
@@ -178,7 +180,7 @@ _REFRESH_NOW_US = ANCHOR_US + 10 * US_PER_DAY + 3 * _HOUR_US
 
 _REFRESH_ORACLE = f"""
     WITH s AS (
-      SELECT p_partkey,
+      SELECT DISTINCT p_partkey,
              ({ANCHOR_US} + (p_partkey % 20 + 1) * {US_PER_DAY}
               - {_REFRESH_NOW_US}) // 1000000 AS diff_s
       FROM part WHERE p_partkey % 10 = 0
