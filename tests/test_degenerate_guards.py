@@ -102,10 +102,10 @@ EARLY_OUT_QUERIES = [
 
 @pytest.fixture(scope="module")
 def empty_star(tmp_path_factory):
-    from tools.empty_fixture import build
+    from tools.fixtures import build
 
     out = str(tmp_path_factory.mktemp("sf_empty_star"))
-    build(out)
+    build("empty", out)
     return out
 
 

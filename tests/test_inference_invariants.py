@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from web_scraping_etl_pipeline_spark.plans import QUERIES
 
-from conftest import SF_DIR
+from tests.conftest import SF_DIR
 
 
 def _rows(spark, name):

@@ -20,6 +20,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 CUR = os.path.join(ROOT, "INVARIANCE.json")
 
@@ -142,3 +144,17 @@ def test_subset_merge_keeps_header(tmp_path):
     assert art["variants"] == ["p4", "p32", "p32_noaqe"]
     assert art["queries"]["q_old"] == prior_row
     assert art["queries"]["q_new"] == {**new_row, "sf_dir": "/data/sf0.01"}
+
+
+def test_subset_merge_into_corrupt_artifact_raises(tmp_path):
+    """An unreadable prior artifact stops a subset merge instead of
+    reading as empty and being replaced by the subset's rows alone."""
+    from tools.invariance_check import write_artifact
+
+    out = tmp_path / "INVARIANCE.json"
+    truncated = b'{"sf_dir": "x", "queries": {"q1": {'
+    out.write_bytes(truncated)
+    row = {"match": True, "rows": 5, "err": None, "body_hash": "y"}
+    with pytest.raises(ValueError):
+        write_artifact(str(out), "/data/sf0.001", {"q01": row})
+    assert out.read_bytes() == truncated

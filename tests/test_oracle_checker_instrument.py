@@ -6,11 +6,13 @@ path and the oracle-parameterization discipline get their own tests.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
 import numpy as np
 import pandas as pd
+import pytest
 
 sys.path.insert(0, "/root/repo")
 
@@ -92,3 +94,17 @@ def test_no_hardcoded_query_vector_ids_in_oracles():
         for m in re.finditer(r"vec_id\s*=\s*(\d+)", src):
             offenders.append((path, m.group(0)))
     assert offenders == [], offenders
+
+
+def test_interrupted_dump_leaves_artifact_whole(tmp_path):
+    """An artifact write that fails part-way leaves the previous file
+    byte-identical and no temp file behind."""
+    from tools.oracle_check import dump_artifact
+
+    out = tmp_path / "A.json"
+    dump_artifact(str(out), {"q1": {"rows": 1}})
+    before = out.read_bytes()
+    with pytest.raises(TypeError):
+        dump_artifact(str(out), {"q1": {"rows": 2}, "q2": object()})
+    assert out.read_bytes() == before
+    assert os.listdir(tmp_path) == ["A.json"]

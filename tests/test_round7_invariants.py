@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from web_scraping_etl_pipeline_spark.plans import QUERIES
 
-from conftest import SF_DIR
+from tests.conftest import SF_DIR
 
 
 def _rows(spark, name):

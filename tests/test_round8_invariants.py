@@ -13,7 +13,7 @@ from __future__ import annotations
 from web_scraping_etl_pipeline_spark.plans import QUERIES
 from web_scraping_etl_pipeline_spark.plans.stattests import _daily
 
-from conftest import SF_DIR
+from tests.conftest import SF_DIR
 
 
 def _rows(spark, name):

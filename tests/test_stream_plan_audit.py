@@ -20,7 +20,7 @@ from web_scraping_etl_pipeline_spark.streaming.events_stream import (
     STREAM_PLANS,
 )
 
-from conftest import SF_DIR
+from tests.conftest import SF_DIR
 
 #: query -> (drain tag, operators the executed stream plan MUST show).
 #: The required-operator pins are the scale-relevant plan properties:

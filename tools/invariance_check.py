@@ -38,7 +38,6 @@ from __future__ import annotations
 import ast
 import hashlib
 import inspect
-import json
 import os
 import sys
 import textwrap
@@ -50,7 +49,12 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from tools.oracle_check import frame_to_rows, pandas_rows
+from tools.oracle_check import (
+    dump_artifact,
+    frame_to_rows,
+    pandas_rows,
+    read_artifact,
+)
 from web_scraping_etl_pipeline_spark.plans import QUERIES
 from web_scraping_etl_pipeline_spark.plans.common import (
     _STAGE_CACHE,
@@ -390,16 +394,11 @@ def write_artifact(json_out: str, sf_dir: str, records: dict) -> None:
     header = {"sf_dir": sf_dir, "variants": [v for v, _ in VARIANTS]}
     for rec in records.values():
         rec["sf_dir"] = sf_dir
-    if len(records) < len(QUERIES) and os.path.exists(json_out):
-        try:
-            with open(json_out) as fh:
-                prior = json.load(fh)
-        except (OSError, ValueError):
-            prior = {}
+    if len(records) < len(QUERIES):
+        prior = read_artifact(json_out)
         header.update({k: prior[k] for k in header if k in prior})
         records = {**prior.get("queries", {}), **records}
-    with open(json_out, "w") as fh:
-        json.dump({**header, "queries": records}, fh, indent=1)
+    dump_artifact(json_out, {**header, "queries": records}, sort_keys=False)
 
 
 def main():

@@ -419,41 +419,49 @@ def lint_result_types(sf_dir: str = "/root/testdata/sf0.001"):
     return hits
 
 
-def main():
-    argv = list(sys.argv[1:])
-    json_out = None
-    if "--lint-types" in argv:
-        i = argv.index("--lint-types")
-        nxt = argv[i + 1] if i + 1 < len(argv) else None
-        sf = nxt if nxt and not nxt.startswith("--") else "/root/testdata/sf0.001"
-        hits = lint_result_types(sf)
-        for name, cols in sorted(hits.items()):
-            print(f"TYPELINT {name}: {cols}")
-        print(f"{len(hits)} oracles with driver-lossy output types")
-        return 1 if hits else 0
-    if "--lint" in argv:
-        hits = lint_float_boundary()
-        for name, exprs in sorted(hits.items()):
-            print(f"LINT {name}")
-            for e in exprs:
-                print(f"  floor/ceil over float expr: {e}")
-        ohits = lint_order_fold()
-        for name, exprs in sorted(ohits.items()):
-            print(f"ORDERLINT {name}")
-            for e in exprs:
-                print(f"  SUM over float expr: {e}")
-        print(
-            f"{len(hits)} unadjudicated float-boundary hits, "
-            f"{len(ohits)} unadjudicated order-sensitive folds"
-        )
-        return 1 if hits or ohits else 0
-    if "--json" in argv:
-        i = argv.index("--json")
-        json_out = argv[i + 1]
-        del argv[i : i + 2]
-    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    names = argv[1:] or sorted(QUERIES)
-    spark = get_spark(app_name="oracle-check")
+def read_artifact(path: str) -> dict:
+    """Parse the JSON object at ``path``; ``{}`` when there is no file.
+
+    An unreadable, truncated or non-object file RAISES instead of
+    reading as empty: a subset run that merged into ``{}`` would
+    replace every prior row with its own handful.
+    """
+    if not os.path.exists(path):
+        return {}
+    with open(path) as fh:
+        prior = json.load(fh)
+    if not isinstance(prior, dict):
+        raise ValueError(f"{path}: not a JSON object")
+    return prior
+
+
+def dump_artifact(path: str, payload: dict, sort_keys: bool = True) -> None:
+    """Write ``payload`` as indented JSON to a temp file beside ``path``
+    and move it into place, so an interrupted run leaves the previous
+    file whole instead of truncated."""
+    tmp = f"{path}.{os.getpid()}.tmp"
+    try:
+        with open(tmp, "w") as fh:
+            json.dump(payload, fh, indent=1, sort_keys=sort_keys)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+
+
+def merge_rows(prior: dict, records: dict) -> dict:
+    """Subset runs MERGE into the prior rows (re-verify the handful of
+    touched/new queries without a full-registry sweep); full runs
+    replace them wholesale."""
+    if len(records) < len(QUERIES):
+        return {**prior, **records}
+    return records
+
+
+def check(spark, sf_dir: str, names: list[str]) -> tuple[dict, list]:
+    """Run each named query on Spark and its oracle on DuckDB over
+    ``sf_dir``, printing a PASS/FAIL line per query. Returns the
+    per-query artifact rows and the names that failed."""
     con = duck_connection(sf_dir)
     failures = []
     records: dict[str, dict] = {}
@@ -542,23 +550,51 @@ def main():
             "" if status == "ok" else f"\n  {status}"
         ))
     print(f"\n{len(names) - len(failures)}/{len(names)} passed")
+    con.close()
+    return records, failures
+
+
+def main():
+    argv = list(sys.argv[1:])
+    json_out = None
+    if "--lint-types" in argv:
+        i = argv.index("--lint-types")
+        nxt = argv[i + 1] if i + 1 < len(argv) else None
+        sf = nxt if nxt and not nxt.startswith("--") else "/root/testdata/sf0.001"
+        hits = lint_result_types(sf)
+        for name, cols in sorted(hits.items()):
+            print(f"TYPELINT {name}: {cols}")
+        print(f"{len(hits)} oracles with driver-lossy output types")
+        return 1 if hits else 0
+    if "--lint" in argv:
+        hits = lint_float_boundary()
+        for name, exprs in sorted(hits.items()):
+            print(f"LINT {name}")
+            for e in exprs:
+                print(f"  floor/ceil over float expr: {e}")
+        ohits = lint_order_fold()
+        for name, exprs in sorted(ohits.items()):
+            print(f"ORDERLINT {name}")
+            for e in exprs:
+                print(f"  SUM over float expr: {e}")
+        print(
+            f"{len(hits)} unadjudicated float-boundary hits, "
+            f"{len(ohits)} unadjudicated order-sensitive folds"
+        )
+        return 1 if hits or ohits else 0
+    if "--json" in argv:
+        i = argv.index("--json")
+        json_out = argv[i + 1]
+        del argv[i : i + 2]
+    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
+    names = argv[1:] or sorted(QUERIES)
+    # read before the sweep: a corrupt artifact stops the run up front
+    prior = read_artifact(json_out) if json_out else {}
+    spark = get_spark(app_name="oracle-check")
+    records, failures = check(spark, sf_dir, names)
     if json_out:
-        # Subset runs MERGE into an existing artifact (same per-row
-        # refresh contract as invariance_check: re-verify the handful
-        # of touched/new queries without a full-registry sweep); full
-        # runs still replace it wholesale.
-        if len(records) < len(QUERIES) and os.path.exists(json_out):
-            try:
-                with open(json_out) as fh:
-                    prior = json.load(fh)
-            except (OSError, ValueError):
-                prior = {}
-            if isinstance(prior, dict):
-                merged = dict(prior)
-                merged.update(records)
-                records = merged
-        with open(json_out, "w") as fh:
-            json.dump(records, fh, indent=1, sort_keys=True)
+        records = merge_rows(prior, records)
+        dump_artifact(json_out, records)
         print(f"wrote {json_out} ({len(records)} records)")
     spark.stop()
     return 1 if failures else 0

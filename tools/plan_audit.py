@@ -43,6 +43,7 @@ sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
+from tools.oracle_check import dump_artifact, read_artifact
 from web_scraping_etl_pipeline_spark.plans import QUERIES
 from web_scraping_etl_pipeline_spark.plans.common import release_transients
 from web_scraping_etl_pipeline_spark.session import get_spark
@@ -1013,9 +1014,6 @@ def main() -> int:
     if collect_hits:
         print(f"{len(collect_hits)} unadjudicated driver-collect sites")
     if json_out:
-        import json  # noqa: PLC0415
-        import os  # noqa: PLC0415
-
         full_run = len(names) >= len(
             [n for n in QUERIES if include_all or n not in STREAMING]
         )
@@ -1028,31 +1026,23 @@ def main() -> int:
                     "PLANSHAPE_PREV.json",
                 )
                 os.replace(json_out, prev_path)
-        elif os.path.exists(json_out):
+        else:
             # SUBSET runs MERGE into the existing artifact (the same
             # per-row refresh contract as oracle_check / invariance:
             # re-audit just the rewritten names in seconds instead of
             # a ~6-minute full sweep) and do NOT rotate - the PREV
             # baseline must stay the last FULL snapshot, or the drift
             # gate would compare against a mid-round partial state.
-            try:
-                with open(json_out) as fh:
-                    prior = json.load(fh)
-            except (OSError, ValueError):
-                prior = {}
-            if isinstance(prior, dict):
-                merged = dict(prior)
-                merged.update(shapes)
-                # a requested name that ERRORED must not keep its
-                # prior (possibly stale-green) row: drop it so the
-                # coverage pin fails loudly instead of the freshness
-                # pin passing on a query that can no longer even be
-                # audited (code-review r12).
-                for n_ in err_names:
-                    merged.pop(n_, None)
-                shapes = merged
-        with open(json_out, "w") as fh:
-            json.dump(shapes, fh, indent=1, sort_keys=True)
+            merged = {**read_artifact(json_out), **shapes}
+            # a requested name that ERRORED must not keep its prior
+            # (possibly stale-green) row: drop it so the coverage pin
+            # fails loudly instead of the freshness pin passing on a
+            # query that can no longer even be audited (code-review
+            # r12).
+            for n_ in err_names:
+                merged.pop(n_, None)
+            shapes = merged
+        dump_artifact(json_out, shapes)
         print(f"wrote {json_out} ({len(shapes)} shapes)")
     return 1 if bad else 0
 

@@ -38,6 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from tools.oracle_check import dump_artifact, read_artifact
 from web_scraping_etl_pipeline_spark.plans.common import (
     global_cumsum,
     release_transients,
@@ -1094,12 +1095,8 @@ def main():
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out_path = os.path.join(here, "SCALE_PROBE.json")
     payload = {"sf_dir": sf_dir, "ks": ks, "probes": results}
-    if only is not None and os.path.exists(out_path):
-        try:
-            with open(out_path) as fh:
-                prior = json.load(fh)
-        except (OSError, ValueError):
-            prior = {}
+    if only is not None:
+        prior = read_artifact(out_path)
         merged = dict(prior.get("probes", {}))
         merged.update(results)
         payload = {
@@ -1107,8 +1104,7 @@ def main():
             "ks": prior.get("ks", ks),
             "probes": merged,
         }
-    with open(out_path, "w") as fh:
-        json.dump(payload, fh, indent=1)
+    dump_artifact(out_path, payload, sort_keys=False)
     print(json.dumps(payload))
     spark.stop()
 
