@@ -9,10 +9,11 @@ text separately (it lives in the stripped @query decorator).
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 import textwrap
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools import invariance_check as ic  # noqa: E402
 
@@ -116,6 +117,29 @@ def test_oracle_hash_sees_oracle_only_rewrites(monkeypatch):
     # the body hash must NOT move on an oracle-only edit (invariance
     # sweeps don't involve the oracle; only correctness rows go stale)
     assert ic.body_hash(name) == b
+
+
+def test_helper_imported_inside_the_body_is_folded(monkeypatch):
+    """q271/q272/q278 import the pipeline helpers inside their bodies
+    (``from ..pipeline import run_batch``), so the helpers are local
+    names, not module globals. A rewrite of the helper must still move
+    each consumer's hash."""
+    from web_scraping_etl_pipeline_spark import pipeline
+
+    for name, helper in (
+        ("q271_pipeline_silver", pipeline.run_batch),
+        ("q272_pipeline_silver_bucketed", pipeline.run_batch_bucketed),
+        ("q278_remaining_time_refresh", pipeline.run_batch),
+    ):
+        before = ic.body_hash(name)
+        entry = ic._normalized_node(helper)
+        key = (helper.__module__, helper.__qualname__)
+        monkeypatch.setitem(
+            ic._AST_CACHE, key, (entry[0] + "|rewritten", *entry[1:])
+        )
+        assert ic.body_hash(name) != before, name
+        monkeypatch.undo()
+        assert ic.body_hash(name) == before
 
 
 def test_hash_is_invariant_under_runtime_cache_mutation():

@@ -6,9 +6,10 @@ fully oracle-backed.
 from __future__ import annotations
 
 import importlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 entry_mod = importlib.import_module("__spark_entry__")
 

@@ -14,7 +14,9 @@ import numpy as np
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
+#: this checkout's root, so its own tools/ are imported
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from tools.oracle_check import (  # noqa: E402
     frame_to_rows,
@@ -88,7 +90,7 @@ def test_no_hardcoded_query_vector_ids_in_oracles():
 
     offenders = []
     for path in glob.glob(
-        "/root/repo/web_scraping_etl_pipeline_spark/plans/*.py"
+        os.path.join(REPO, "web_scraping_etl_pipeline_spark/plans/*.py")
     ):
         src = open(path).read()
         for m in re.finditer(r"vec_id\s*=\s*(\d+)", src):
@@ -108,3 +110,40 @@ def test_interrupted_dump_leaves_artifact_whole(tmp_path):
         dump_artifact(str(out), {"q1": {"rows": 2}, "q2": object()})
     assert out.read_bytes() == before
     assert os.listdir(tmp_path) == ["A.json"]
+
+
+def test_restamp_selects_stale_rows_per_check():
+    """With no names, each restamp check re-runs exactly the rows of its
+    own artifact that are missing or carry another hash; the plan audit
+    never covers streaming queries."""
+    from tools import restamp
+    from tools.invariance_check import body_hash, oracle_hash
+    from tools.plan_audit import STREAMING
+    from web_scraping_etl_pipeline_spark.plans import QUERIES
+
+    names = sorted(QUERIES)
+    fresh = {
+        n: {"body_hash": body_hash(n), "oracle_hash": oracle_hash(n)}
+        for n in names
+    }
+    stale_body = {**fresh, names[0]: {**fresh[names[0]], "body_hash": "x"}}
+    stale_oracle = {**fresh, names[1]: {**fresh[names[1]], "oracle_hash": "x"}}
+    missing = {n: r for n, r in fresh.items() if n != names[2]}
+    stream = sorted(STREAMING & set(names))[0]
+    artifacts = {
+        "CORRECTNESS_SF01.json": stale_body,
+        "INVARIANCE.json": {"queries": stale_oracle},
+        restamp.fixtures.SWEEP: {"dup": stale_oracle},
+        "PLANSHAPE.json": missing,
+    }
+    assert restamp.stale_names("oracle", "CORRECTNESS_SF01.json", artifacts) == [
+        names[0]
+    ]
+    # invariance rows attest no oracle, so an oracle edit leaves them fresh
+    assert restamp.stale_names("invariance", "INVARIANCE.json", artifacts) == []
+    assert restamp.stale_names("fixture", "dup", artifacts) == [names[1]]
+    assert restamp.stale_names("fixture", "empty", artifacts) == names
+    del artifacts["PLANSHAPE.json"][stream]
+    assert restamp.stale_names("plan", "PLANSHAPE.json", artifacts) == [
+        names[2]
+    ]

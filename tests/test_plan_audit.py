@@ -9,7 +9,7 @@ could flip, Python stages whose Arrow opt-in could rot).
 
 from __future__ import annotations
 
-from tests.conftest import SF_DIR
+from tests.conftest import REPO_ROOT, SF_DIR
 from tools.plan_audit import ALLOW, audit
 from web_scraping_etl_pipeline_spark.plans import QUERIES
 
@@ -355,7 +355,7 @@ def test_subset_merge_drops_errored_rows(tmp_path):
     r = subprocess.run(
         [sys.executable, "tools/plan_audit.py", "--json", str(art),
          str(tmp_path / "no_such_sf"), "q01_deadline_horizon"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert r.returncode == 1
     merged = json.loads(art.read_text())

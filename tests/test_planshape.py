@@ -94,6 +94,25 @@ ALLOWED_DRIFT: dict[str, str] = {
         "cold shape identical at PREV commit (xchg 20 == 20), PREV row "
         "carried warm-session nested-cache counts (231)"
     ),
+    # Full restamp after the parquet-schema memo moved every
+    # body_hash. These three rows re-audited to shapes that differ from
+    # PREV, but a cold fresh-process audit of the three names gives
+    # the same shapes at the parent commit (bc9ae5f) and at this one
+    # (q164 xchg 2 bcast 4 smj 0 bhj 4, q268 2/0/1/0, q378 10/3/0/2),
+    # on the same 4-core host: the PREV rows do not reproduce at the
+    # commit they were stamped for, so no plan changed here.
+    "q164_min_cost_supplier": (
+        "restamp re-audit; cold shape identical at the parent commit "
+        "(xchg 4 -> 2, smj 1 -> 0), PREV row not reproducible there"
+    ),
+    "q268_leakage_safe_split": (
+        "restamp re-audit; cold shape identical at the parent commit "
+        "(xchg 0 -> 2, bhj 1 -> 0), PREV row not reproducible there"
+    ),
+    "q378_topk_churn": (
+        "restamp re-audit; cold shape identical at the parent commit "
+        "(bcast 2 -> 3, smj 1 -> 0), PREV row not reproducible there"
+    ),
     # r14 optimization (guide section 2.4): the cluster-size count now
     # rides the SAME re-center hash aggregate instead of recomputing
     # the final round's full assignment pass (scan + broadcast NLJ +

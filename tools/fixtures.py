@@ -556,6 +556,23 @@ def build(name: str, out_dir: str) -> None:
     con.close()
 
 
+def sweep(name: str, names: list[str]) -> tuple[dict, list]:
+    """Build fixture ``name`` into a fresh temporary directory and run
+    tools/oracle_check.py's check of ``names`` over it in a new Spark
+    session. Returns the rows and the names that failed."""
+    sys.path.insert(0, REPO)
+    from tools.oracle_check import check
+    from web_scraping_etl_pipeline_spark.session import get_spark
+
+    with tempfile.TemporaryDirectory(prefix=f"sf_{name}_") as sf_dir:
+        build(name, sf_dir)
+        spark = get_spark(app_name="oracle-check")
+        try:
+            return check(spark, sf_dir, names)
+        finally:
+            spark.stop()
+
+
 def main(argv: list[str]) -> int:
     if not argv or argv[0] not in FIXTURES:
         choices = "|".join(FIXTURES)
@@ -563,28 +580,16 @@ def main(argv: list[str]) -> int:
             f"usage: python tools/fixtures.py {{{choices}}} [query ...]"
         )
     sys.path.insert(0, REPO)
-    from tools.oracle_check import (
-        check,
-        dump_artifact,
-        merge_rows,
-        read_artifact,
-    )
+    from tools.oracle_check import dump_artifact, merge_rows, read_artifact
     from web_scraping_etl_pipeline_spark.plans import QUERIES
-    from web_scraping_etl_pipeline_spark.session import get_spark
 
     name, names = argv[0], argv[1:] or sorted(QUERIES)
     # read before the sweep: a corrupt artifact stops the run up front
-    sweep = read_artifact(SWEEP)
-    with tempfile.TemporaryDirectory(prefix=f"sf_{name}_") as sf_dir:
-        build(name, sf_dir)
-        spark = get_spark(app_name="oracle-check")
-        try:
-            records, failures = check(spark, sf_dir, names)
-        finally:
-            spark.stop()
-    sweep[name] = merge_rows(sweep.get(name, {}), records)
-    dump_artifact(SWEEP, sweep)
-    print(f"wrote {SWEEP} [{name}] ({len(sweep[name])} records)")
+    sweep_rows = read_artifact(SWEEP)
+    records, failures = sweep(name, names)
+    sweep_rows[name] = merge_rows(sweep_rows.get(name, {}), records)
+    dump_artifact(SWEEP, sweep_rows)
+    print(f"wrote {SWEEP} [{name}] ({len(sweep_rows[name])} records)")
     return 1 if failures else 0
 
 

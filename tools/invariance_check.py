@@ -37,6 +37,7 @@ from __future__ import annotations
 
 import ast
 import hashlib
+import importlib
 import inspect
 import os
 import sys
@@ -152,18 +153,10 @@ def _module_assignments(modname: str) -> dict:
             and node.value is not None
         ):
             out[node.target.id] = ast.dump(node.value)
-        elif isinstance(node, ast.ImportFrom) and node.level:
-            # relative import: resolve against the module's PACKAGE,
-            # not a naive modname.rsplit - for a package __init__ the
-            # two differ by one component and the rsplit resolved
-            # level-1 imports to the GRANDparent, silently skipping
-            # the fold (code-review r12).
-            base = getattr(mod, "__package__", None) or modname.rsplit(
-                ".", 1
-            )[0]
-            for _ in range(node.level - 1):
-                base = base.rsplit(".", 1)[0]
-            origin = f"{base}.{node.module}" if node.module else base
+        elif isinstance(node, ast.ImportFrom):
+            origin = _import_origin(modname, node)
+            if origin is None:
+                continue
             for alias in node.names:
                 # record the ORIGINAL name alongside the origin: the
                 # defining module assigns under alias.name, so an
@@ -174,15 +167,25 @@ def _module_assignments(modname: str) -> dict:
                 out[alias.asname or alias.name] = (
                     "import", origin, alias.name,
                 )
-        elif isinstance(node, ast.ImportFrom) and (
-            node.module or ""
-        ).startswith(_PKG):
-            for alias in node.names:
-                out[alias.asname or alias.name] = (
-                    "import", node.module, alias.name,
-                )
     _ASSIGN_CACHE[modname] = out
     return out
+
+
+def _import_origin(modname: str, node: ast.ImportFrom) -> str | None:
+    """Absolute module a ``from ... import`` in ``modname`` names, or
+    None when it lies outside the package.
+
+    A relative import resolves against the module's PACKAGE, not a
+    naive modname.rsplit - for a package __init__ the two differ by
+    one component and the rsplit resolved level-1 imports to the
+    GRANDparent, silently skipping the fold."""
+    if not node.level:
+        return node.module if (node.module or "").startswith(_PKG) else None
+    mod = sys.modules.get(modname)
+    base = getattr(mod, "__package__", None) or modname.rsplit(".", 1)[0]
+    for _ in range(node.level - 1):
+        base = base.rsplit(".", 1)[0]
+    return f"{base}.{node.module}" if node.module else base
 
 
 def _source_assignment(modname: str, name: str, hops: int = 0):
@@ -237,7 +240,8 @@ def _free_globals(src: str) -> set[str]:
 
 
 def _normalized_node(obj):
-    """(normalized ast.dump, free-name list) of a function/class:
+    """(normalized ast.dump, free-name list, local imports) of a
+    function/class:
     decorators and docstrings (including NESTED function/method
     docstrings) stripped, so comment / formatting / docstring /
     decorator edits do not move the hash. Free names are the names
@@ -247,7 +251,9 @@ def _normalized_node(obj):
     (code-review r12), and a shadow in one nested scope must not hide
     a genuine global read in another (ADVICE r12). The @query
     decorator and its oracle argument are fingerprinted separately -
-    see oracle_hash."""
+    see oracle_hash. Local imports are the (origin module, name)
+    pairs of every in-package ``from ... import`` inside the body: a
+    helper imported there is as much a callee as a module global."""
     key = (getattr(obj, "__module__", None), getattr(obj, "__qualname__", None))
     if key in _AST_CACHE:
         return _AST_CACHE[key]
@@ -261,7 +267,14 @@ def _normalized_node(obj):
         ):
             _strip_docstring(n)
     free = sorted(_free_globals(ast.unparse(node)))
-    out = (ast.dump(node), free)
+    local_imports = sorted(
+        (origin, alias.name)
+        for n in ast.walk(node)
+        if isinstance(n, ast.ImportFrom)
+        and (origin := _import_origin(key[0], n)) is not None
+        for alias in n.names
+    )
+    out = (ast.dump(node), free, local_imports)
     _AST_CACHE[key] = out
     return out
 
@@ -307,7 +320,7 @@ def body_hash(name: str) -> str:
             continue
         seen.add(key)
         try:
-            dump, free = _normalized_node(obj)
+            dump, free, local_imports = _normalized_node(obj)
         except (OSError, TypeError, SyntaxError):
             continue  # builtins / C-level: environment, not semantics
         parts.append(f"{key[0]}|{key[1]}|{dump}")
@@ -319,18 +332,23 @@ def body_hash(name: str) -> str:
                 if inspect.isfunction(member):
                     stack.append(member)
         g = getattr(obj, "__globals__", None) or {}
-        for nm in free:
-            if nm not in g:
+        names = [(key[0], nm, g[nm]) for nm in free if nm in g]
+        for origin, nm in local_imports:
+            try:
+                mod = importlib.import_module(origin)
+            except ImportError:
                 continue
-            val = g[nm]
+            if hasattr(mod, nm):
+                names.append((origin, nm, getattr(mod, nm)))
+        for modname, nm, val in names:
             rep = _const_repr(val)
             if rep is not None:
-                parts.append(f"{key[0]}|${nm}|{rep}")
+                parts.append(f"{modname}|${nm}|{rep}")
                 continue
             if isinstance(val, (dict, list, set)):
                 # mutable container: fold the STATIC source assignment
                 # (never the runtime value - caches mutate mid-sweep)
-                src = _source_assignment(key[0], nm)
+                src = _source_assignment(modname, nm)
                 if src is not None:
                     parts.append(f"{src[0]}|@{nm}|{src[1]}")
                 continue
@@ -411,6 +429,17 @@ def main():
     sf_dir = argv[0] if argv else "/root/testdata/sf0.001"
     names = argv[1:] or sorted(QUERIES)
     spark = get_spark(app_name="invariance-check")
+    records, failures = sweep(spark, sf_dir, names)
+    if json_out:
+        write_artifact(json_out, sf_dir, records)
+    spark.stop()
+    return 1 if failures else 0
+
+
+def sweep(spark, sf_dir: str, names: list[str]) -> tuple[dict, list]:
+    """Run each named query under every variant, printing a PASS/FAIL
+    line per query. Returns the per-query artifact rows and the names
+    that failed."""
     records: dict[str, dict] = {}
     failures = []
     for name in names:
@@ -459,10 +488,7 @@ def main():
         rec["body_hash"] = body_hash(name)
         records[name] = rec
     print(f"\n{len(names) - len(failures)}/{len(names)} partition-invariant")
-    if json_out:
-        write_artifact(json_out, sf_dir, records)
-    spark.stop()
-    return 1 if failures else 0
+    return records, failures
 
 
 if __name__ == "__main__":

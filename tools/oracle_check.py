@@ -53,6 +53,11 @@ from web_scraping_etl_pipeline_spark.schemas import STAR_TABLES
 from web_scraping_etl_pipeline_spark.session import get_spark
 
 
+def _duck_memory_mb() -> int:
+    host_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return min(24 * 1024, host_mb // 4)
+
+
 def duck_connection(sf_dir: str):
     con = duckdb.connect()
     # Resource caps (round 12): a pathological oracle plan - the
@@ -60,8 +65,11 @@ def duck_connection(sf_dir: str):
     # PK-duplicated census corpus - must fail fast with a clean OOM
     # instead of ballooning to ~100 GB RSS and filling the disk with
     # temp spill (which then poisons CONCURRENT sweeps with spurious
-    # IO errors). Real sweeps at sf0.1 use well under 8 GB.
-    con.execute("SET memory_limit='24GB'")
+    # IO errors). The cap is at most a quarter of this host's memory:
+    # a cap above it bounds nothing, and q219's sf0.1 oracle grew to
+    # 11 GB on a 16 GB host until the kernel killed the sweep; under a
+    # 4 GB cap it spills and finishes in 18 s.
+    con.execute(f"SET memory_limit='{_duck_memory_mb()}MB'")
     con.execute("SET max_temp_directory_size='20GB'")
     for name in STAR_TABLES:
         con.execute(

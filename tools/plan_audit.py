@@ -967,6 +967,48 @@ def main() -> int:
         print(f"WARN stale BOUNDED_COLLECT_ALLOW entry: {key}")
 
     spark = get_spark(app_name="plan-audit")
+    shapes, err_names, bad = audit_queries(spark, sf_dir, names)
+    bad += len(collect_hits)
+    print(f"\n{len(names) - bad}/{len(names)} clean")
+    if collect_hits:
+        print(f"{len(collect_hits)} unadjudicated driver-collect sites")
+    if json_out:
+        full_run = len(names) >= len(
+            [n for n in QUERIES if include_all or n not in STREAMING]
+        )
+        if full_run:
+            # rotate: last committed snapshot becomes the diff
+            # baseline for the round-over-round drift gate.
+            if os.path.exists(json_out):
+                prev_path = os.path.join(
+                    os.path.dirname(os.path.abspath(json_out)) or ".",
+                    "PLANSHAPE_PREV.json",
+                )
+                os.replace(json_out, prev_path)
+        else:
+            # SUBSET runs MERGE into the existing artifact (the same
+            # per-row refresh contract as oracle_check / invariance:
+            # re-audit just the rewritten names in seconds instead of
+            # a ~6-minute full sweep) and do NOT rotate - the PREV
+            # baseline must stay the last FULL snapshot, or the drift
+            # gate would compare against a mid-round partial state.
+            merged = {**read_artifact(json_out), **shapes}
+            # a requested name that ERRORED must not keep its prior
+            # (possibly stale-green) row: drop it so the coverage pin
+            # fails loudly instead of the freshness pin passing on a
+            # query that can no longer even be audited.
+            for n_ in err_names:
+                merged.pop(n_, None)
+            shapes = merged
+        dump_artifact(json_out, shapes)
+        print(f"wrote {json_out} ({len(shapes)} shapes)")
+    return 1 if bad else 0
+
+
+def audit_queries(spark, sf_dir: str, names: list[str]):
+    """Audit each named query's physical plan, printing one line per
+    query. Returns the PLANSHAPE rows, the names whose plan could not
+    be built, and the count of flagged or errored queries."""
     bad = 0
     shapes: dict[str, dict] = {}
     err_names: list[str] = []
@@ -1009,42 +1051,7 @@ def main() -> int:
             f"xchg={a['xchg']} bcast={a['bcast']} smj={a['smj']} "
             f"bhj={a['bhj']} wsc={a['wsc']} arrow={a['arrow']}{flag_note}"
         )
-    bad += len(collect_hits)
-    print(f"\n{len(names) - bad}/{len(names)} clean")
-    if collect_hits:
-        print(f"{len(collect_hits)} unadjudicated driver-collect sites")
-    if json_out:
-        full_run = len(names) >= len(
-            [n for n in QUERIES if include_all or n not in STREAMING]
-        )
-        if full_run:
-            # rotate: last committed snapshot becomes the diff
-            # baseline for the round-over-round drift gate.
-            if os.path.exists(json_out):
-                prev_path = os.path.join(
-                    os.path.dirname(os.path.abspath(json_out)) or ".",
-                    "PLANSHAPE_PREV.json",
-                )
-                os.replace(json_out, prev_path)
-        else:
-            # SUBSET runs MERGE into the existing artifact (the same
-            # per-row refresh contract as oracle_check / invariance:
-            # re-audit just the rewritten names in seconds instead of
-            # a ~6-minute full sweep) and do NOT rotate - the PREV
-            # baseline must stay the last FULL snapshot, or the drift
-            # gate would compare against a mid-round partial state.
-            merged = {**read_artifact(json_out), **shapes}
-            # a requested name that ERRORED must not keep its prior
-            # (possibly stale-green) row: drop it so the coverage pin
-            # fails loudly instead of the freshness pin passing on a
-            # query that can no longer even be audited (code-review
-            # r12).
-            for n_ in err_names:
-                merged.pop(n_, None)
-            shapes = merged
-        dump_artifact(json_out, shapes)
-        print(f"wrote {json_out} ({len(shapes)} shapes)")
-    return 1 if bad else 0
+    return shapes, err_names, bad
 
 
 if __name__ == "__main__":

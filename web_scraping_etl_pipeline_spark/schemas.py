@@ -1,10 +1,17 @@
-"""Explicit schemas for every table the engine touches.
+"""Explicit schemas for the tables the engine writes and ingests.
 
 The reference declares its schema once in DDL
 (/root/reference/src/create_table.py:51-76) and then re-carries it as
 hand-maintained dict keys (which drifts - SURVEY.md section 8 B1). Here one
-StructType per table is the single source of truth, shared by readers,
-writers, and tests. No ``inferSchema`` on the pipeline path.
+StructType per jobs-domain and multimodal table is the single source of
+truth, shared by readers, writers, and tests. No ``inferSchema`` on the
+pipeline path.
+
+The driver star tables are only named here (``STAR_TABLES``). Their
+schema is read from each file's parquet footer, once per file per
+session (``sources.star.parquet_schema``): the physical encoding of
+``events.ts`` differs between files (NANOS or MICROS), and the loader
+derives ``ts_us`` from whichever type the footer declares.
 
 Naming: the reference's ``update``/``update_date``/``posted_date`` drift
 is collapsed to one canonical ``posted_date`` (SURVEY.md section 8 B1).

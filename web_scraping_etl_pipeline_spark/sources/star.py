@@ -18,11 +18,24 @@ derived type-adaptively by :func:`ts_us_col`: identical in both
 systems, timezone-free, cheap to compare/bucket at 100 TB (a long
 column beats a timestamp for shuffle/sort keys). Helpers convert to
 real timestamps only at presentation/streaming boundaries.
+
+schema reads
+------------
+Inferring a parquet schema opens the file footer and runs one Spark
+job (about 0.1 s). :func:`parquet_schema` does that once per file per
+session and every reader passes the result through ``.schema()``:
+:func:`load_table` and the streaming file sources. The memo is keyed by
+the session's application id and the file's real path, mtime and size,
+so a rewritten file or a new session is inferred afresh; it holds one
+entry per distinct file read.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from ..session import configure
 
@@ -87,10 +100,32 @@ def ts_us_col(df: DataFrame):
     return F.unix_micros(F.col("ts").cast("timestamp"))
 
 
+#: realpath -> ((applicationId, st_mtime_ns, st_size), inferred schema).
+#: One entry per file: a stamp mismatch replaces the entry.
+_PARQUET_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, read from the
+    footer once per (session, file version). The inferred dtype of
+    ``events.ts`` (bigint NANOS or timestamp MICROS) is what
+    :func:`ts_us_col` dispatches on, so it is memoized, not declared."""
+    real = os.path.realpath(path)
+    st = os.stat(real)
+    stamp = (spark.sparkContext.applicationId, st.st_mtime_ns, st.st_size)
+    hit = _PARQUET_SCHEMAS.get(real)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _PARQUET_SCHEMAS[real] = (stamp, schema)
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one star-schema table; events gains ``ts_us`` (epoch micros)."""
     configure(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         df = df.withColumn("ts_us", ts_us_col(df))
     return df

@@ -26,19 +26,18 @@ from ..plans.dedup import (
 from ..plans.mlprep import _h60, _h60_sql
 from ..plans.registry import query
 from ..plans.common import t
-from .events_stream import _SCHEMA_CACHE, _run_to_sink
+from ..sources.star import parquet_schema
+from .events_stream import _run_to_sink
 
 
 def _stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents table (same pattern as
-    events_stream._stream_events: footer schema + pathGlobFilter)."""
-    key = f"{sf_dir}/documents"
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-        _SCHEMA_CACHE[key] = schema
+    events_stream._stream_events: memoized footer schema +
+    pathGlobFilter)."""
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(
+            parquet_schema(spark, f"{sf_dir}/documents.parquet")
+        )
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )

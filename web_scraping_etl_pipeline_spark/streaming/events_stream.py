@@ -52,16 +52,9 @@ def stream_scratch(prefix: str) -> str:
 def _cleanup_scratch() -> None:
     for d in _SCRATCH_DIRS:
         shutil.rmtree(d, ignore_errors=True)
-from ..sources.star import US_PER_DAY, ts_us_col
+from ..sources.star import US_PER_DAY, parquet_schema, ts_us_col
 from ..plans.common import t
 from ..plans.registry import query
-
-
-#: parquet-footer schema per sf_dir - the five streaming queries each
-#: construct a fresh stream, and re-reading the footer every time is a
-#: repeated driver-side file open for a schema that cannot change
-#: within a run.
-_SCHEMA_CACHE: dict[str, "object"] = {}
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -71,12 +64,10 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     file source requires while selecting the single ``events.parquet``
     inside it."""
     configure(spark)
-    schema = _SCHEMA_CACHE.get(sf_dir)
-    if schema is None:
-        schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        _SCHEMA_CACHE[sf_dir] = schema
     s = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(
+            parquet_schema(spark, f"{sf_dir}/events.parquet")
+        )
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
